@@ -418,20 +418,42 @@ object Bench {
     try {
       val stream = java.nio.file.Files.lines(
         java.nio.file.Paths.get("/proc/stat"))
-      val first = try stream.findFirst().orElse("") finally stream.close()
-      val cols = first.split("\\s+")
-      if (cols.length < 9 || cols(0) != "cpu") None
-      else {
-        val vals = cols.drop(1).flatMap(v =>
-          scala.util.Try(v.toLong).toOption)
-        Some((vals(7), vals.sum)) // steal is field 8 (0-based 7)
-      }
+      stealTicksOf(try stream.findFirst().orElse("") finally stream.close())
     } catch { case _: Throwable => None }
+
+  /** (steal, total) of one aggregate `cpu` line. The total sums user..steal
+    * only: guest and guest_nice are already counted inside user and nice,
+    * so adding them again would inflate the denominator.
+    */
+  private[graft] def stealTicksOf(line: String): Option[(Long, Long)] = {
+    val cols = line.split("\\s+")
+    if (cols.length < 9 || cols(0) != "cpu") None
+    else {
+      val vals = cols.drop(1).flatMap(v => scala.util.Try(v.toLong).toOption)
+      if (vals.length < 8) None
+      else Some((vals(7), vals.take(8).sum)) // steal is field 8 (0-based 7)
+    }
+  }
 
   private[graft] def stealPct(a: Option[(Long, Long)],
                               b: Option[(Long, Long)]): Double =
     (for ((s0, t0) <- a; (s1, t1) <- b if t1 > t0)
       yield (s1 - s0).toDouble * 100.0 / (t1 - t0)).getOrElse(-1.0)
+
+  /** Consecutive steal windows, one per family: each opens where the
+    * previous one closed. The first opens at [[open]], so a window that
+    * was never opened reads -1 (absent).
+    */
+  private[graft] final class StealWindows(sample: () => Option[(Long, Long)]) {
+    private var prev: Option[(Long, Long)] = None
+    def open(): Unit = prev = sample()
+    def close(): Double = {
+      val now = sample()
+      val pct = stealPct(prev, now)
+      prev = now
+      pct
+    }
+  }
 
   /** MACHINE-READABLE contamination verdict (round 18, r17 verdict item
     * 4): the r17 driver record (117.1 s at loadavg 3.8-7.0 vs 85-88 s
@@ -468,17 +490,21 @@ object Bench {
     // family-boundary samples can. Same 0.5-normalized bar as the start
     // sample; the family letter rides the reason so a reader knows WHICH
     // stretch to reject.
+    // Locale.ROOT: the reasons are machine-read, so a host locale with a
+    // decimal comma must not change them
+    def fmt(pattern: String, args: Any*): String =
+      pattern.formatLocal(Locale.ROOT, args: _*)
     val midFlags = loadavgByFamily.flatMap { case (fam, s) =>
       load1Of(s).filter(_ / nCpu >= 0.5).map(l =>
-        f"loadavg_family_$fam $l%.2f / $nCpu cpus = ${l / nCpu}%.2f >= 0.5")
+        fmt("loadavg_family_%s %.2f / %d cpus = %.2f >= 0.5", fam, l, nCpu, l / nCpu))
     }
     Seq(
       if (canaryRatio >= 2.5)
-        Some(f"canary_ratio $canaryRatio%.2f >= 2.5") else None,
+        Some(fmt("canary_ratio %.2f >= 2.5", canaryRatio)) else None,
       if (canaryFamilyMax >= 2.5)
-        Some(f"canary_family_max $canaryFamilyMax%.2f >= 2.5") else None,
+        Some(fmt("canary_family_max %.2f >= 2.5", canaryFamilyMax)) else None,
       load1.filter(_ / nCpu >= 0.5).map(l =>
-        f"loadavg_start $l%.2f / $nCpu cpus = ${l / nCpu}%.2f >= 0.5"),
+        fmt("loadavg_start %.2f / %d cpus = %.2f >= 0.5", l, nCpu, l / nCpu)),
     ).flatten ++ midFlags
   }
 
@@ -546,11 +572,7 @@ object Bench {
     // p12_upper, an uppercase map, read 5.89 s). Pins stay alive WITHIN
     // a family so the amortization story (one pair-gen/CC/postings
     // build, N consumers) remains what the suite measures.
-    def evictAll(): Unit = {
-      graft.queries.Dedup.evictCaches(spark)
-      graft.queries.Similarity.evictCaches(spark)
-      graft.queries.TextAnalytics.evictCaches(spark)
-    }
+    def evictAll(): Unit = graft.core.Pins.evict(spark)
     var family = ' '
     val startMs = scala.collection.mutable.LinkedHashMap[String, Long]()
     // per-query task metrics (r19 verdict item 3): peakExecutionMemory
@@ -624,13 +646,11 @@ object Bench {
     // per-family hypervisor-steal percentage (see [[stealTicks]]): the
     // window opens at the previous family's close
     val famSteal = scala.collection.mutable.LinkedHashMap[Char, Double]()
-    var stealPrev = stealTicks()
+    val steal = new StealWindows(() => stealTicks())
     def familyLoad(fam: Char): Unit =
       if (fam != ' ') {
         famLoad(fam) = loadavg()
-        val now = stealTicks()
-        famSteal(fam) = stealPct(stealPrev, now)
-        stealPrev = now
+        famSteal(fam) = steal.close()
       }
     // per-family PIN STORAGE snapshot (round 21, r20 verdict item 6):
     // peakExecutionMemory prices task buffers, not cached blocks — the
@@ -654,6 +674,9 @@ object Bench {
           timeQuery("p12_upper", SparkEntry.queries("p12_upper"), 2)
         if (ok) sec else -1.0
       } else -1.0
+    // the first family's steal window opens after the canary baseline run,
+    // so it measures the family alone
+    steal.open()
     def familyCanary(fam: Char): Unit =
       if (fam != ' ' && only.isEmpty && canaryBase > 0) {
         val (sec, ok, _) =

@@ -33,9 +33,7 @@ class BenchAttributionSpec extends SparkSpec {
     "d10_best_keeper", "d7_dup_components")
 
   private def evictAll(): Unit = {
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
   }
 
   private def runPass(order: Seq[String]): (Double, Map[String, Long]) = {

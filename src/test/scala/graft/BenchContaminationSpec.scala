@@ -91,4 +91,34 @@ class BenchContaminationSpec extends AnyFunSuite {
     assert(Bench.contaminationOf(1.0, 1.0, "1.0 1.0 1.0", 32,
       Seq('a' -> "2.0 1.0 1.0", 'd' -> "unavailable")).isEmpty)
   }
+
+  test("steal total sums user..steal only (guest ticks are inside user)") {
+    // user nice system idle iowait irq softirq steal guest guest_nice
+    val line = "cpu  600 0 100 250 0 0 0 50 400 0"
+    assert(Bench.stealTicksOf(line) == Some((50L, 1000L)))
+    assert(Bench.stealTicksOf("intr 1 2 3") == None)
+  }
+
+  test("the first family's steal window opens after the canary baseline") {
+    var now = (0L, 0L)
+    val windows = new Bench.StealWindows(() => Some(now))
+    assert(windows.close() == -1.0, "an unopened window reads absent")
+    now = (500L, 1000L) // the canary baseline run: heavy steal
+    windows.open()
+    now = (510L, 2000L)
+    assert(windows.close() == 1.0, "the first family must not see the canary's steal")
+    now = (530L, 3000L)
+    assert(windows.close() == 2.0, "each window opens at the previous close")
+  }
+
+  test("contamination reasons format the same under any default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try assert(Bench.contaminationOf(2.6, 1.0, "2.40 2.00 1.80", 4,
+        Seq('d' -> "3.00 1.00 1.00")) == Seq(
+      "canary_ratio 2.60 >= 2.5",
+      "loadavg_start 2.40 / 4 cpus = 0.60 >= 0.5",
+      "loadavg_family_d 3.00 / 4 cpus = 0.75 >= 0.5"))
+    finally java.util.Locale.setDefault(saved)
+  }
 }

@@ -222,7 +222,7 @@ class DedupDifferentialSpec extends SparkSpec {
     // rep-pair cross products + within-content-group pairs) emits
     // EXACTLY the doc-level lshBandPairs(minhashSigs(corpus)) set.
     val dir = "/root/testdata/sf0.001"
-    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    graft.core.Pins.evict(spark, Some(dir))
     val got = graft.queries.Dedup.lshCandDocPairs(spark, dir)
       .select($"doc_i", $"doc_j")
       .as[(Long, Long)].collect().toSet
@@ -239,7 +239,7 @@ class DedupDifferentialSpec extends SparkSpec {
     assert(expected.nonEmpty, "degenerate fixture: no band collisions")
     assert(got.size == graft.queries.Dedup.lshCandDocPairs(spark, dir).count(),
       "expansion emitted duplicate pair rows")
-    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    graft.core.Pins.evict(spark, Some(dir))
   }
 
   test("LSH hot-band cap: cap=∞ ≡ None; a planted hot band stops pairing; intra immune") {
@@ -291,7 +291,7 @@ class DedupDifferentialSpec extends SparkSpec {
   test("shared pair frame: ONE pair-gen per (session, dir); thresholds are filters") {
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    graft.core.Pins.evict(spark, Some(dir))
     val base = graft.queries.Dedup.sharedJaccardPairs(
       spark, dir, graft.queries.Dedup.BasePairThreshold)
     val again = graft.queries.Dedup.sharedJaccardPairs(
@@ -311,11 +311,11 @@ class DedupDifferentialSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       graft.queries.Dedup.sharedJaccardPairs(spark, dir, 0.1)
     }
-    graft.queries.Dedup.evictCaches(spark, Some(dir))
+    graft.core.Pins.evict(spark, Some(dir))
     val c = graft.queries.Dedup.sharedJaccardPairs(
       spark, dir, graft.queries.Dedup.BasePairThreshold)
     assert(!(c eq base), "eviction must drop the pinned entry")
-    graft.queries.Dedup.evictCaches(spark)
+    graft.core.Pins.evict(spark)
   }
 
   test("incremental dedup (d18): flags new-vs-ref dups only, never new-vs-new") {
@@ -444,7 +444,7 @@ class DedupDifferentialSpec extends SparkSpec {
         .as[(Long, Long, Double, Long, Double, Long)].collect().toSet
       assert(got == expected,
         s"missing=${expected -- got}\nspurious=${got -- expected}")
-    } finally graft.queries.Dedup.evictCaches(spark, Some(dir))
+    } finally graft.core.Pins.evict(spark, Some(dir))
   }
 
   test("CDC chunks (x19) realign after an insertion; fixed-stride chunks don't") {
@@ -518,7 +518,7 @@ class DedupDifferentialSpec extends SparkSpec {
       cont.foreach { case (i, j, c, jx) =>
         assert(c >= jx && c <= 1.0, s"($i,$j): containment $c vs jaccard $jx")
       }
-    } finally graft.queries.Dedup.evictCaches(spark, Some(dir))
+    } finally graft.core.Pins.evict(spark, Some(dir))
   }
 
   test("semantic dedup (d19): keep-first exemplar policy on planted duplicate groups") {

@@ -26,9 +26,7 @@ class PinRecoverySpec extends SparkSpec {
       .foreach(_.unpersist(blocking = true))
 
   test("posting/pair/assignment pins recompute after cached-block loss") {
-    graft.queries.TextAnalytics.evictCaches(spark)
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
+    graft.core.Pins.evict(spark)
 
     // materialize one pin per family through its public consumer
     val postings = SparkEntry.queries("x14_unigram_logprob")(spark, dir)
@@ -45,9 +43,7 @@ class PinRecoverySpec extends SparkSpec {
     assert(after === expected,
       "pins must recompute through lineage after block loss")
 
-    graft.queries.TextAnalytics.evictCaches(spark)
-    graft.queries.Dedup.evictCaches(spark)
-    graft.queries.Similarity.evictCaches(spark)
+    graft.core.Pins.evict(spark)
   }
 
   test("evictCaches releases the persisted blocks (Dataset.unpersist, not .rdd)") {
@@ -55,14 +51,14 @@ class PinRecoverySpec extends SparkSpec {
     // leaked the pinned blocks until session end. Dataset.storageLevel
     // is the public witness: persisted while pinned, NONE after evict.
     import org.apache.spark.storage.StorageLevel
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val docs = graft.core.Tables.documents(spark, dir)
     val pin = graft.queries.TextAnalytics.sharedPostings(docs)
     val stats = graft.queries.TextAnalytics.sharedTermStats(docs)._1
     pin.count(); stats.count()
     assert(pin.storageLevel != StorageLevel.NONE, "pin must be persisted")
     assert(stats.storageLevel != StorageLevel.NONE, "stats must be persisted")
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     assert(pin.storageLevel == StorageLevel.NONE,
       "eviction must release the posting pin's blocks")
     assert(stats.storageLevel == StorageLevel.NONE,
@@ -76,7 +72,7 @@ class PinRecoverySpec extends SparkSpec {
     // ONE parquet scan → (doc, term) hash agg → repartition(doc_id);
     // the term-stats pin folds from the POSTING pin (a cached scan),
     // never from parquet.
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val docs = graft.core.Tables.documents(spark, dir)
     val pinPlan = graft.queries.TextAnalytics.sharedPostings(docs)
       .queryExecution.executedPlan.toString
@@ -90,7 +86,7 @@ class PinRecoverySpec extends SparkSpec {
       graft.queries.TextAnalytics.sharedTermStats(docs)._1)
     assert(!statsPlan.contains("FileScan"),
       s"term stats must fold from the pin, not re-scan parquet:\n$statsPlan")
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
   }
 
   test("CC-rooted pins survive block loss under a RELIABLE checkpoint dir") {
@@ -111,7 +107,7 @@ class PinRecoverySpec extends SparkSpec {
       .createTempDirectory("graft-cc-ck")
     try {
       spark.sparkContext.setCheckpointDir(ckDir.toString)
-      graft.queries.Dedup.evictCaches(spark)
+      graft.core.Pins.evict(spark)
       val comp = SparkEntry.queries("d7_dup_components")(spark, dir)
       val before = comp.collect().sortBy(_.toString).mkString("|")
       dropAllCachedBlocks()
@@ -119,7 +115,7 @@ class PinRecoverySpec extends SparkSpec {
       assert(after === before,
         "the pinned component frame must recompute through the reliable " +
           "checkpoint after block loss")
-      graft.queries.Dedup.evictCaches(spark)
+      graft.core.Pins.evict(spark)
     } finally {
       spark.sparkContext.setCheckpointDir(null)
       // temp round files: nothing references them once the pins evict

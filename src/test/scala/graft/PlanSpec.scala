@@ -98,7 +98,7 @@ class PlanSpec extends SparkSpec {
     // therefore consume InMemoryTableScan on every side and plan no
     // content re-aggregation of its own: the only collect_list agg is
     // the one inside the printed cached-relation subtree.
-    graft.queries.Dedup.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val df = SparkEntry.queries("d18_incremental_dedup")(spark, dir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
@@ -151,7 +151,7 @@ class PlanSpec extends SparkSpec {
     // suite: whichever spec materialized the pin first determined what
     // later plan assertions saw), and walk with PlanWalk so the pin's
     // cached BUILD plan (asserted at its own site) is excluded.
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val df = graft.queries.TextAnalytics.bm25Plan(spark, dir)
     df.collect() // finalize AQE
     val p = graft.core.PlanWalk.outer(df)
@@ -189,7 +189,7 @@ class PlanSpec extends SparkSpec {
     // re-aggregated the instance stream per eval), zero explicit
     // clustering repartitions, and map-side partial aggregation on the
     // stats folds. The stats join stays size-selected.
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     for (q <- Seq("x14_unigram_logprob", "x16_bigram_logprob")) {
       val df = SparkEntry.queries(q)(spark, dir)
       df.collect() // finalize AQE
@@ -220,7 +220,7 @@ class PlanSpec extends SparkSpec {
     // full exchange; a regression back to it doubles the build's
     // shuffle volume at 100 TB.
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val docs = graft.core.Tables.documents(spark, dir)
     for ((name, pin) <- Seq(
         "postings" -> graft.queries.TextAnalytics.sharedPostings(docs),
@@ -668,7 +668,7 @@ class PlanSpec extends SparkSpec {
   test("x29_interp_lm: pin-fed agg+join — no corpus scan, vocab-sized stats joins") {
     // Round-14 shape: see the x14/x16 test — x29 folds its bigram AND
     // unigram totals from the two pinned count frames.
-    graft.queries.TextAnalytics.evictCaches(spark)
+    graft.core.Pins.evict(spark)
     val df = SparkEntry.queries("x29_interp_lm")(spark, dir)
     df.collect() // finalize AQE
     val p = graft.core.PlanWalk.outer(df)

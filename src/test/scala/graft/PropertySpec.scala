@@ -937,6 +937,10 @@ class PropertySpec extends SparkSpec {
     // → iteration-2 pairs: (a_b,c) 1, (c,a_b) 1, (a_b,a) 1, (a,b) 1,
     //   (x,a_b) 1, (a_b,y) 1, (c,c) 2 → argmax (c,c) n=2
     assert(got(1) == ((2, "c", "c", 2L, "c_c")), s"iter2=${got(1)}")
+    // no adjacent pair at all (here: no documents): no merge, no row —
+    // DuckDB's empty b1
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(graft.queries.TextAnalytics.bpeMerges(none, 2).count() == 0L)
   }
 
   test("BPE encode (x32): per-doc counts replay the merges exactly, " +
@@ -955,6 +959,13 @@ class PropertySpec extends SparkSpec {
     assert(got(2) == ((2L, 4L, 3L, 1L, 0.75)), s"doc2=${got(2)}")
     assert(got(3) == ((3L, 3L, 2L, 1L, 0.666667)), s"doc3=${got(3)}")
     assert(got(4) == ((4L, 0L, 0L, 0L, 1.0)), s"doc4=${got(4)}")
+    // no adjacent pair: every doc keeps its tokens; no docs: no rows
+    val single = Seq((0L, "a"), (1L, "")).toDF("doc_id", "text")
+    assert(graft.queries.TextAnalytics.bpeEncode(single, 2)
+      .as[(Long, Long, Long, Long, Double)].collect().sortBy(_._1).toSeq ==
+      Seq((0L, 1L, 1L, 0L, 1.0), (1L, 0L, 0L, 0L, 1.0)))
+    val none = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    assert(graft.queries.TextAnalytics.bpeEncode(none, 2).count() == 0L)
   }
 
   test("cluster sample (v18): bounded-buffer pick == rank-window pick, " +
